@@ -93,7 +93,9 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.var_samp("l_quantity"), 6).alias("qty_var"),
         F.round(F.avg("l_quantity"), 6).alias("qty_avg"),
     )
-    return moments.join(F.broadcast(pct), "l_returnflag").select(
+    # left join: a group whose prices are all NULL has no order
+    # statistics but keeps its moments row (NULL percentiles)
+    return moments.join(F.broadcast(pct), "l_returnflag", "left").select(
         "l_returnflag", "qty_stddev", "qty_var",
         "price_median", "price_p90", "qty_avg",
     )

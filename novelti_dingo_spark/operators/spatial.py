@@ -626,16 +626,6 @@ def pip_crossings_hof_sql(
     )
 
 
-def _pip_case_hof_sql(px: str, py: str) -> str:
-    """Spark-side pid CASE over the HOF-folded crossing counts (same
-    first-match-wins semantics as _pip_case_sql)."""
-    whens = " ".join(
-        f"WHEN {pip_crossings_hof_sql(px, py, v)} % 2 = 1 THEN '{name}'"
-        for name, v in sorted(POLYGONS.items())
-    )
-    return f"CASE {whens} ELSE NULL END"
-
-
 def _pip_crossings_col(px: Column, py: Column, verts) -> Column:
     """Column-API twin of pip_crossings_hof_sql: fold the literal edge
     array with the SAME per-edge arithmetic ((x2-x1)*(py-y1) -

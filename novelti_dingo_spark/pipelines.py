@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from . import schemas
 from .sources.io import ensure_session_confs, load_table
+from .sources.tablecore import apply_deletes, multiset_diff
 
 
 def build_order_mart(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
@@ -2688,6 +2689,15 @@ def _rewrite_rows_cow(
     version = int(lakefs.read_text(spark, f"{base}/LATEST").strip())
     src = f"{base}/v={version}"
     manifest = json.loads(lakefs.read_text(spark, f"{src}/_manifest.json"))
+    if assignments is not None:
+        unknown = sorted(
+            set(assignments) - set(_manifest_schema(manifest).fieldNames())
+        )
+        if unknown:
+            raise ValueError(
+                f"update_rows_cow assigns columns not in the schema: "
+                f"{unknown}"
+            )
     if manifest.get("append"):
         raise ValueError(
             f"v={version} at {base} is an append-chain head — compact_chain "
@@ -3552,30 +3562,9 @@ def _pos_parent_scan(spark, base: str):
             f"(v={data_v} is an append/partitioned segment) — "
             "materialize_mor or compact first"
         )
-    df = _with_row_address(spark.read.parquet(f"{base}/v={data_v}"))
-    for layer in layers:
-        if layer[0] == "eq":
-            _, col, deletes_dir = layer
-            keys = spark.read.parquet(deletes_dir).select(
-                F.col("value").alias(f"_mor_{col}")
-            )
-            df = df.join(
-                F.broadcast(keys),
-                df[col] == F.col(f"_mor_{col}"),
-                "left_anti",
-            )
-        else:
-            _, deletes_dir = layer
-            addrs = spark.read.parquet(deletes_dir).select(
-                F.col("file").alias("_del_file"),
-                F.col("pos").alias("_del_pos"),
-            )
-            df = df.join(
-                F.broadcast(addrs),
-                (df["_mor_file"] == F.col("_del_file"))
-                & (df["_mor_pos"] == F.col("_del_pos")),
-                "left_anti",
-            )
+    df = _subtract_layers(
+        _with_row_address(spark.read.parquet(f"{base}/v={data_v}")), layers
+    )
     return parent_v, pm, df
 
 
@@ -3709,30 +3698,30 @@ def _mor_record(m: dict) -> dict | None:
 
 def _mor_layers(spark, base: str, manifest: dict):
     """(data_version, layers) for a possibly-MOR manifest — the delete
-    layers newest-first back to the physical snapshot, each either
-    ("eq", col, deletes_dir) or ("pos", deletes_dir). O(stack)
-    manifest reads."""
+    layers newest-first back to the physical snapshot, each
+    (kind, deletes_dir, n_rows, col): kind "eq" (keys of `col`) or
+    "pos" ((file, pos) addresses, col None), n_rows the delete
+    relation's size as the manifest records it. O(stack) manifest
+    reads."""
     import json
 
     from .sources import lakefs
 
     layers = []
     m = manifest
-    while _mor_record(m):
+    while rec := _mor_record(m):
+        vdir = f"{base}/v={m['version']}"
         if m.get("mor_delete"):
             layers.append(
-                (
-                    "eq",
-                    m["mor_delete"]["col"],
-                    f"{base}/v={m['version']}/_deletes",
-                )
+                ("eq", f"{vdir}/_deletes", rec["n_keys"], rec["col"])
             )
         else:
-            layers.append(("pos", f"{base}/v={m['version']}/_pos_deletes"))
+            layers.append(
+                ("pos", f"{vdir}/_pos_deletes", rec["n_rows_deleted"], None)
+            )
         m = json.loads(
             lakefs.read_text(
-                spark,
-                f"{base}/v={_mor_record(m)['parent']}/_manifest.json",
+                spark, f"{base}/v={rec['parent']}/_manifest.json"
             )
         )
     return m["version"], layers
@@ -3756,39 +3745,39 @@ def _with_row_address(df: DataFrame) -> DataFrame:
     )
 
 
+def _subtract_layers(df: DataFrame, layers: list) -> DataFrame:
+    """Remove from `df` the rows each `_mor_layers` layer names:
+    equality layers join on the key column, positional layers on the
+    (`_mor_file`, `_mor_pos`) address `df` must already carry."""
+    spark = df.sparkSession
+    for kind, deletes_dir, n_rows, col in layers:
+        dels = spark.read.parquet(deletes_dir)
+        if kind == "eq":
+            dels = dels.select(F.col("value").alias(f"_mor_{col}"))
+            cond = df[col] == F.col(f"_mor_{col}")
+        else:
+            dels = dels.select(
+                F.col("file").alias("_del_file"),
+                F.col("pos").alias("_del_pos"),
+            )
+            cond = (df["_mor_file"] == F.col("_del_file")) & (
+                df["_mor_pos"] == F.col("_del_pos")
+            )
+        df = apply_deletes(df, dels, cond, n_rows)
+    return df
+
+
 def _apply_mor(spark, df: DataFrame, base: str, manifest: dict) -> DataFrame:
-    """Subtract every MOR layer from `df` (broadcast anti joins — the
-    delete sets are the small side by construction). Equality layers
-    join on the key column; positional layers join on the (file, pos)
-    address, which `_with_row_address` attaches here and drops before
-    returning — callers never see the address columns."""
+    """Subtract every MOR layer from `df` (tablecore.apply_deletes — the
+    delete sets are the small side by construction). Positional layers
+    need the (file, pos) address, which `_with_row_address` attaches
+    here and drops before returning — callers never see the address
+    columns."""
     _, layers = _mor_layers(spark, base, manifest)
     has_pos = any(layer[0] == "pos" for layer in layers)
     if has_pos:
         df = _with_row_address(df)
-    for layer in layers:
-        if layer[0] == "eq":
-            _, col, deletes_dir = layer
-            keys = spark.read.parquet(deletes_dir).select(
-                F.col("value").alias(f"_mor_{col}")
-            )
-            df = df.join(
-                F.broadcast(keys),
-                df[col] == F.col(f"_mor_{col}"),
-                "left_anti",
-            )
-        else:
-            _, deletes_dir = layer
-            addrs = spark.read.parquet(deletes_dir).select(
-                F.col("file").alias("_del_file"),
-                F.col("pos").alias("_del_pos"),
-            )
-            df = df.join(
-                F.broadcast(addrs),
-                (df["_mor_file"] == F.col("_del_file"))
-                & (df["_mor_pos"] == F.col("_del_pos")),
-                "left_anti",
-            )
+    df = _subtract_layers(df, layers)
     if has_pos:
         df = df.drop("_mor_file", "_mor_pos")
     return df
@@ -4051,9 +4040,9 @@ def table_changes(
     equality-vector delete contributes parent-resolved rows semi-joined
     to its O(keys) vector; a compaction contributes zero. Only commits
     with no row-addressed metadata (positional vectors, COW rewrites)
-    fall back to a multiset diff (exceptAll both ways) of the two
-    resolved snapshots — exact even for duplicate rows, at the cost of
-    two scans. Full publishes without lineage can't be walked (there is
+    fall back to a multiset diff (tablecore.multiset_diff) of the two
+    resolved snapshots — exact even for duplicate rows, each snapshot
+    scanned once. Full publishes without lineage can't be walked (there is
     no recorded predecessor) and raise — diff_versions is the explicit
     tool there.
 
@@ -4071,16 +4060,22 @@ def table_changes(
     head_df, _ = read_version_chain(spark, base, to_v)
     out_fields = head_df.schema.fields
 
-    def conform(df: DataFrame, change: str, v: int) -> DataFrame:
+    out_names = [f.name for f in out_fields]
+
+    def aligned(df: DataFrame) -> DataFrame:
         names = set(df.columns)
-        cols = [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in names
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in out_fields
-        ]
         return df.select(
-            *cols,
+            *[
+                F.col(f.name).cast(f.dataType).alias(f.name)
+                if f.name in names
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in out_fields
+            ]
+        )
+
+    def conform(df: DataFrame, change: str, v: int) -> DataFrame:
+        return aligned(df).select(
+            "*",
             F.lit(change).alias("_change_type"),
             F.lit(v).cast("long").alias("_commit_version"),
         )
@@ -4118,17 +4113,11 @@ def table_changes(
             # the two resolved snapshots (exact under duplicates)
             old_df, _ = read_version_chain(spark, base, p)
             new_df, _ = read_version_chain(spark, base, cv)
-            old_c = conform(old_df, "", cv).drop(
-                "_change_type", "_commit_version"
-            )
-            new_c = conform(new_df, "", cv).drop(
-                "_change_type", "_commit_version"
-            )
+            diff = multiset_diff(aligned(old_df), aligned(new_df), out_names)
             parts.append(
-                conform(new_c.exceptAll(old_c), "insert", cv)
-            )
-            parts.append(
-                conform(old_c.exceptAll(new_c), "delete", cv)
+                diff.select(
+                    "*", F.lit(cv).cast("long").alias("_commit_version")
+                )
             )
         elif m.get("mor_delete"):
             col = m["mor_delete"]["col"]
@@ -4136,10 +4125,12 @@ def table_changes(
                 F.col("value").alias("_cdf_key")
             )
             parent_df, _ = read_version_chain(spark, base, p)
-            hit = parent_df.join(
-                F.broadcast(keys),
+            hit = apply_deletes(
+                parent_df,
+                keys,
                 parent_df[col] == F.col("_cdf_key"),
-                "left_semi",
+                m["mor_delete"]["n_keys"],
+                how="left_semi",
             )
             parts.append(conform(hit, "delete", cv))
         elif m.get("append"):

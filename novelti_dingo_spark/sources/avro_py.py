@@ -91,11 +91,6 @@ def _read_bytes(buf: io.BytesIO) -> bytes:
     return out
 
 
-def _skip_exact(buf: io.BytesIO, n: int) -> None:
-    if len(buf.read(n)) != n:
-        raise ValueError("truncated avro block")
-
-
 # ------------------------------------------------------------ file header
 
 

@@ -27,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
-from .io import load_table
 
 
 def create_external_tables(
@@ -97,15 +96,3 @@ def save_partitioned(
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     df.write.mode(mode).partitionBy(*partition_cols).saveAsTable(name)
 
-
-def bootstrap_catalog(spark: SparkSession, sf_dir: str) -> None:
-    """One-shot catalog bootstrap for a deployment: external tables for
-    every source, plus bucketed copies of the two big join sides
-    (lineitem/orders on orderkey — the engine's hottest join key)."""
-    create_external_tables(spark, sf_dir)
-    save_bucketed(
-        load_table(spark, sf_dir, "lineitem"), "b_lineitem", "l_orderkey"
-    )
-    save_bucketed(
-        load_table(spark, sf_dir, "orders"), "b_orders", "o_orderkey"
-    )

@@ -71,15 +71,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .avro_py import read_avro_records, write_avro_records
+from .tablecore import apply_deletes, multiset_diff, row_address
 
 _STATUS_DELETED = 2
-
-# MOR delete relations at or under this many rows broadcast to the
-# anti-join; above it the hint is dropped and the join shuffles
-# (round-14 — a foreign table with tens of millions of deletes must
-# not OOM the broadcast). ~5M (file,pos) or identifier tuples is
-# tens of MB serialized, comfortably under executor headroom.
-MOR_BROADCAST_MAX_DELETE_ROWS = 5_000_000
 
 
 class UnsupportedIcebergFeature(Exception):
@@ -874,13 +868,7 @@ def _grouped_keyed_scan(
                 else F.lit(None).cast(fld.dataType).alias(fld.name)
                 for pn, fld in zip(phys, schema.fields)
             ]
-        return raw.select(
-            *sel,
-            F.substring_index(
-                F.col("_metadata.file_path"), "/", -1
-            ).alias("_file_base"),
-            F.col("_metadata.row_index").alias("_pos"),
-        )
+        return row_address(raw).select(*sel, "_file_base", "_pos")
 
     scans = [_scan_group(phys, gfiles) for phys, gfiles in scan_groups]
     out = scans[0]
@@ -1207,29 +1195,11 @@ def read_iceberg_table(
     if not pos_deletes and not eq_deletes:
         return scan.select(*cols)
     # Row-level deletes, both v2 flavors, each one distributed LEFT
-    # ANTI join against a broadcast (KB–MB) delete relation. File
+    # ANTI join (tablecore.apply_deletes, which broadcasts unless the
+    # manifests' record_count says the relation is huge). File
     # identity joins on the basename (uuid-unique in practice; verified
     # driver-side, loud refusal otherwise, since URI spelling differs
     # between the writer's recorded path and the scanner's file_path).
-
-    # Delete-relation join strategy (round-14, the round-13 verdict's
-    # #7): delete relations are usually KB–MB and broadcast, but a
-    # foreign table can carry millions of delete rows — past the
-    # threshold the hint is dropped and the anti-join plans as a
-    # shuffle join instead of OOMing every executor on a giant
-    # broadcast table. record_count comes from the manifests, so the
-    # decision costs nothing.
-    n_del_rows = sum(
-        int(d.get("record_count") or 0)
-        for d in pos_deletes + eq_deletes
-    )
-    if n_del_rows <= MOR_BROADCAST_MAX_DELETE_ROWS:
-        def _side(d):
-            return F.broadcast(d)
-    else:
-        def _side(d):
-            return d
-
     basenames = [p.rsplit("/", 1)[-1] for p in paths]
     if len(set(basenames)) != len(basenames):
         raise UnsupportedIcebergFeature(
@@ -1242,19 +1212,11 @@ def read_iceberg_table(
         # positions — Spark's parquet reader exposes exactly that
         # ordinal as _metadata.row_index. The explicit file key already
         # scopes the delete to the files it was written against.
-        dpaths = sorted(
-            _abs_path(table_path, d["file_path"]) for d in pos_deletes
-        )
-        dels = (
-            spark.read.schema("file_path string, pos long")
-            .parquet(*dpaths)
-            .select(
-                F.substring_index("file_path", "/", -1).alias("_file_base"),
-                F.col("pos").alias("_pos"),
-            )
-        )
-        keyed = keyed.join(
-            _side(dels), ["_file_base", "_pos"], "left_anti"
+        keyed = apply_deletes(
+            keyed,
+            _pos_delete_relation(spark, table_path, pos_deletes),
+            ["_file_base", "_pos"],
+            _n_records(pos_deletes),
         )
     if eq_deletes:
         # EQUALITY deletes: each delete file holds identifier-column
@@ -1264,11 +1226,10 @@ def read_iceberg_table(
         # survive). The data-file sequence number rides in on a
         # broadcast basename→seq mapping; delete files group by their
         # equality_ids so each distinct identifier set is one anti-join.
-        id_to_name = {}
-        for fjs in _schema_json(
-            meta, snap if snapshot_id is not None else None
-        )["fields"]:
-            id_to_name[int(fjs["id"])] = fjs["name"]
+        id_to_name = {
+            int(fjs["id"]): fjs["name"]
+            for fjs in schema_json_used["fields"]
+        }
         seq_rows = [
             (f["file_path"].rsplit("/", 1)[-1], int(f["_seq"]))
             for f in files
@@ -1288,63 +1249,98 @@ def read_iceberg_table(
                     f"equality_ids reference unknown field id {exc}"
                 ) from None
             groups.setdefault(names, []).append(d)
-        # rename-aware (round-14): a delete parquet written before a
-        # column rename holds the OLD physical names — resolve each
-        # delete file's names through its adding snapshot's schema,
-        # same field-id identity as the data scan
-        snap_sid = {
-            int(s["snapshot-id"]): int(s.get("schema-id", 0))
-            for s in meta.get("snapshots", [])
-        }
-        schemas_by_id = {
-            int(s.get("schema-id", 0)): s
-            for s in meta.get("schemas", [])
-        }
         for names, dels_group in sorted(groups.items()):
-            parts = []
-            for d in dels_group:
-                d_schema = schemas_by_id.get(
-                    snap_sid.get(int(d.get("_snap") or 0), -1)
-                )
-                d_names = (
-                    {
-                        int(fld["id"]): fld["name"]
-                        for fld in d_schema["fields"]
-                    }
-                    if d_schema is not None
-                    else {}
-                )
-                phys = [
-                    d_names.get(int(i), id_to_name[int(i)])
-                    for i in d["equality_ids"]
-                ]
-                sub = spark.read.schema(
-                    T.StructType(
-                        [
-                            T.StructField(
-                                pn, schema[n].dataType, True
-                            )
-                            for pn, n in zip(phys, names)
-                        ]
-                    )
-                ).parquet(_abs_path(table_path, d["file_path"]))
-                parts.append(
-                    sub.select(
-                        *[
-                            F.col(pn).alias(f"_eq_{n}")
-                            for pn, n in zip(phys, names)
-                        ],
-                        F.lit(int(d["_seq"])).alias("_del_seq"),
-                    )
-                )
-            dels = parts[0]
-            for p in parts[1:]:
-                dels = dels.unionAll(p)
             cond = F.col("_data_seq") < F.col("_del_seq")
             for n in names:
                 cond = cond & F.col(n).eqNullSafe(F.col(f"_eq_{n}"))
-            keyed = keyed.join(_side(dels), cond, "left_anti")
+            keyed = apply_deletes(
+                keyed,
+                _eq_delete_relation(
+                    spark, table_path, meta, schema, names, dels_group
+                ),
+                cond,
+                _n_records(dels_group),
+            )
     return keyed.select(*cols)
+
+
+def _n_records(delete_files: list[dict]) -> int:
+    """Rows across `delete_files`, from the manifests' record_count."""
+    return sum(int(d.get("record_count") or 0) for d in delete_files)
+
+
+def _pos_delete_relation(
+    spark: SparkSession, table_path: str, pos_deletes: list[dict]
+) -> DataFrame:
+    """The (`_file_base`, `_pos`) rows of position-delete files."""
+    from pyspark.sql import functions as F
+
+    return (
+        spark.read.schema("file_path string, pos long")
+        .parquet(
+            *sorted(_abs_path(table_path, d["file_path"]) for d in pos_deletes)
+        )
+        .select(
+            F.substring_index("file_path", "/", -1).alias("_file_base"),
+            F.col("pos").alias("_pos"),
+        )
+    )
+
+
+def _eq_delete_relation(
+    spark: SparkSession,
+    table_path: str,
+    meta: dict,
+    schema: T.StructType,
+    names: tuple,
+    eq_deletes: list[dict],
+) -> DataFrame:
+    """The identifier tuples of equality-delete files sharing one
+    equality_ids set (`names` under `schema`), as `_eq_<name>` columns
+    plus each file's `_del_seq`. Rename-aware (round-14): a delete
+    parquet written before a column rename holds the OLD physical
+    names, so each file's names resolve through its adding snapshot's
+    schema — the same field-id identity as the data scan."""
+    from pyspark.sql import functions as F
+
+    snap_sid = {
+        int(s["snapshot-id"]): int(s.get("schema-id", 0))
+        for s in meta.get("snapshots", [])
+    }
+    schemas_by_id = {
+        int(s.get("schema-id", 0)): s for s in meta.get("schemas", [])
+    }
+    parts = []
+    for d in eq_deletes:
+        d_schema = schemas_by_id.get(
+            snap_sid.get(int(d.get("_snap") or 0), -1)
+        )
+        d_names = (
+            {int(fld["id"]): fld["name"] for fld in d_schema["fields"]}
+            if d_schema is not None
+            else {}
+        )
+        phys = [
+            d_names.get(int(i), n) for i, n in zip(d["equality_ids"], names)
+        ]
+        sub = spark.read.schema(
+            T.StructType(
+                [
+                    T.StructField(pn, schema[n].dataType, True)
+                    for pn, n in zip(phys, names)
+                ]
+            )
+        ).parquet(_abs_path(table_path, d["file_path"]))
+        parts.append(
+            sub.select(
+                *[F.col(pn).alias(f"_eq_{n}") for pn, n in zip(phys, names)],
+                F.lit(int(d["_seq"])).alias("_del_seq"),
+            )
+        )
+    dels = parts[0]
+    for p in parts[1:]:
+        dels = dels.unionAll(p)
+    return dels
 
 
 # --------------------------------------------------------------- writer
@@ -2248,8 +2244,9 @@ def read_iceberg_changes(
       construction: the parent state is exactly what the delete
       applied to);
     - overwrite commits have no row lineage — they fall back to the
-      exact multiset diff of the two resolved snapshots (exceptAll both
-      ways: two scans, still correct for duplicate rows).
+      exact multiset diff of the two resolved snapshots
+      (tablecore.multiset_diff: each scanned once, still correct for
+      duplicate rows).
 
     An update surfaces as its delete+insert pair. Changes compose with
     the MOR reader: each side of every diff is a fully-resolved
@@ -2283,162 +2280,75 @@ def read_iceberg_changes(
         sid = snap["snapshot-id"]
         op = (snap.get("summary") or {}).get("operation")
 
-        def _commit_entries(content_wanted: set[int]) -> list[dict]:
-            """data_file records this snapshot's own entries added,
-            filtered by content kind."""
-            mlist = _abs_path(table_path, snap["manifest-list"])
-            _, manifests = read_avro_records(mlist)
-            out = []
-            for mf in manifests:
-                _, entries = read_avro_records(
-                    _abs_path(table_path, mf["manifest_path"])
-                )
-                for e in entries:
-                    if int(e["status"]) == _STATUS_DELETED:
-                        continue
-                    if int(e.get("snapshot_id") or 0) != int(sid):
-                        continue
-                    rec = e["data_file"]
-                    if int(rec.get("content") or 0) in content_wanted:
-                        out.append(rec)
-            return out
-
+        new_files = new_pos = new_eq = []
+        if op in ("append", "delete"):
+            # the files THIS commit added (their manifest entries carry
+            # its snapshot id) — O(batch) inserts / O(deleted) victims
+            new_files, new_pos, new_eq = (
+                [r for r in recs if r["_snap"] == int(sid)]
+                for recs in _live_files(table_path, snap, None, meta)
+            )
         if op == "append":
-            # only THIS commit's added files — O(batch) inserts
-            paths = sorted(
-                _abs_path(table_path, r["file_path"])
-                for r in _commit_entries({0})
-            )
-            if not paths:
+            if not new_files:
                 continue
-            chunk = (
-                spark.read.schema(schema)
-                .parquet(*paths)
-                .select(*cols, F.lit("insert").alias("_change_type"))
+            chunk = _grouped_keyed_scan(
+                spark, table_path, meta, schema, _schema_json(meta),
+                new_files,
+            ).select(*cols, F.lit("insert").alias("_change_type"))
+        elif new_pos and not new_eq:
+            # row-addressed: the delete parquet names exact
+            # (file, ordinal) victims among the parent's files,
+            # scanned rename-aware under the head schema
+            prev_files, _p, _e = _live_files(table_path, prev, None, meta)
+            keyed = _grouped_keyed_scan(
+                spark, table_path, meta, schema, _schema_json(meta),
+                prev_files,
             )
-        elif op == "delete":
-            new_pos = _commit_entries({1})
-            new_eq = _commit_entries({2})
-            before = read_iceberg_table(
-                spark, table_path, snapshot_id=prev["snapshot-id"]
+            chunk = apply_deletes(
+                keyed,
+                _pos_delete_relation(spark, table_path, new_pos),
+                ["_file_base", "_pos"],
+                _n_records(new_pos),
+                how="left_semi",
+            ).select(*cols, F.lit("delete").alias("_change_type"))
+        elif new_eq and not new_pos and len(
+            {tuple(r["equality_ids"]) for r in new_eq}
+        ) == 1:
+            # row-addressed: victims = parent state null-safe
+            # semi-joined on the identifier tuples (the parent
+            # state IS the delete's sequence scope)
+            id_to_name = {
+                int(f_["id"]): f_["name"]
+                for f_ in _schema_json(meta)["fields"]
+            }
+            names = tuple(
+                id_to_name[int(i)] for i in new_eq[0]["equality_ids"]
             )
-            eq_id_sets = {tuple(r["equality_ids"]) for r in new_eq}
-            if new_pos and not new_eq:
-                # row-addressed: the delete parquet names exact
-                # (file, ordinal) victims — one broadcast semi-join
-                dels = (
-                    spark.read.schema("file_path string, pos long")
-                    .parquet(
-                        *sorted(
-                            _abs_path(table_path, r["file_path"])
-                            for r in new_pos
-                        )
-                    )
-                    .select(
-                        F.substring_index(
-                            "file_path", "/", -1
-                        ).alias("_fb"),
-                        F.col("pos").alias("_pp"),
-                    )
-                )
-                prev_files, _p, _e = _live_files(
-                    table_path, prev, None, meta
-                )
-                tpaths = sorted(
-                    _abs_path(table_path, f_["file_path"])
-                    for f_ in prev_files
-                )
-                keyed = spark.read.schema(schema).parquet(*tpaths).select(
-                    *cols,
-                    F.substring_index(
-                        F.col("_metadata.file_path"), "/", -1
-                    ).alias("_fb"),
-                    F.col("_metadata.row_index").alias("_pp"),
-                )
-                chunk = (
-                    keyed.join(
-                        F.broadcast(dels), ["_fb", "_pp"], "left_semi"
-                    )
-                    .select(
-                        *cols, F.lit("delete").alias("_change_type")
-                    )
-                )
-            elif new_eq and not new_pos and len(eq_id_sets) == 1:
-                # row-addressed: victims = parent state null-safe
-                # semi-joined on the identifier tuples (the parent
-                # state IS the delete's sequence scope)
-                id_to_name = {
-                    int(f_["id"]): f_["name"]
-                    for f_ in _schema_json(meta)["fields"]
-                }
-                names = [
-                    id_to_name[int(i)] for i in new_eq[0]["equality_ids"]
-                ]
-                parts = [
-                    spark.read.schema(
-                        T.StructType([schema[n] for n in names])
-                    ).parquet(_abs_path(table_path, r["file_path"]))
-                    for r in new_eq
-                ]
-                dels = parts[0]
-                for p_ in parts[1:]:
-                    dels = dels.unionAll(p_)
-                dels = dels.select(
-                    *[F.col(n).alias(f"_eq_{n}") for n in names]
-                )
-                on = None
-                for n in names:
-                    c = F.col(n).eqNullSafe(F.col(f"_eq_{n}"))
-                    on = c if on is None else (on & c)
-                chunk = before.join(
-                    F.broadcast(dels), on, "left_semi"
-                ).select(*cols, F.lit("delete").alias("_change_type"))
-            else:
-                # mixed/foreign delete shapes: exact multiset diff
-                after = read_iceberg_table(
-                    spark, table_path, snapshot_id=sid
-                )
-                chunk = before.exceptAll(after).select(
-                    *cols, F.lit("delete").alias("_change_type")
-                )
-        else:  # overwrite / unknown: exact multiset diff, both ways.
-            # Round-15 (guide §2.3 "aggregate before you shuffle" +
-            # §2.4 "remove shuffles outright"): the two exceptAll legs
-            # each scanned BOTH resolved snapshots — 4 MOR reads (12
-            # parquet scans / 8 joins in the merge-fixture plan) for
-            # one diff. Both directions are ONE signed-count pipeline
-            # instead: union(after×+1, before×−1) → groupBy(all cols)
-            # sum(_w) → each value replicates |Δ| times tagged by
-            # sign(Δ) — exactly exceptAll's multiset semantics
-            # (groupBy's NULL-as-equal grouping matches exceptAll's
-            # null handling), with each snapshot scanned once,
-            # map-side partial aggregation, ONE exchange total and no
-            # join. Per-snapshot-pair equality vs the exceptAll form
-            # is pinned in tests/test_round15_opt.py.
-            before = read_iceberg_table(
-                spark, table_path, snapshot_id=prev["snapshot-id"]
-            )
-            after = read_iceberg_table(
-                spark, table_path, snapshot_id=sid
-            )
-            tagged = after.select(
-                *cols, F.lit(1).alias("_w")
-            ).unionAll(before.select(*cols, F.lit(-1).alias("_w")))
-            delta = tagged.groupBy(*cols).agg(F.sum("_w").alias("_d"))
-            chunk = delta.filter(F.col("_d") != 0).select(
-                *cols,
-                F.explode(
-                    F.when(
-                        F.col("_d") > 0,
-                        F.array_repeat(
-                            F.lit("insert"), F.col("_d").cast("int")
-                        ),
-                    ).otherwise(
-                        F.array_repeat(
-                            F.lit("delete"), (-F.col("_d")).cast("int")
-                        )
-                    )
-                ).alias("_change_type"),
+            on = None
+            for n in names:
+                c = F.col(n).eqNullSafe(F.col(f"_eq_{n}"))
+                on = c if on is None else (on & c)
+            chunk = apply_deletes(
+                read_iceberg_table(
+                    spark, table_path, snapshot_id=prev["snapshot-id"]
+                ),
+                _eq_delete_relation(
+                    spark, table_path, meta, schema, names, new_eq
+                ),
+                on,
+                _n_records(new_eq),
+                how="left_semi",
+            ).select(*cols, F.lit("delete").alias("_change_type"))
+        else:
+            # overwrite / unknown commits and mixed or foreign delete
+            # shapes: exact multiset diff of the two resolved snapshots
+            # (a delete commit's diff holds only deletes)
+            chunk = multiset_diff(
+                read_iceberg_table(
+                    spark, table_path, snapshot_id=prev["snapshot-id"]
+                ),
+                read_iceberg_table(spark, table_path, snapshot_id=sid),
+                cols,
             )
         pieces.append(
             chunk.select(

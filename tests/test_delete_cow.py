@@ -148,6 +148,22 @@ def test_update_cow_anonymizes_in_place(spark, sf_small, tmp_path):
     assert df.schema == o.schema  # types preserved through the rewrite
 
 
+def test_update_cow_refuses_unknown_column(spark, tmp_path):
+    """An assignment to a column the schema lacks raises before any
+    write: no new version, LATEST unchanged."""
+    from novelti_dingo_spark.pipelines import update_rows_cow
+
+    base = str(tmp_path / "lake")
+    publish_versioned(
+        spark.createDataFrame([(1, 2.0), (2, 3.0)], "k long, x double"),
+        base,
+    )
+    with pytest.raises(ValueError, match="not in the schema"):
+        update_rows_cow(spark, base, "k", [1], {"nope": F.lit(0)})
+    assert lakefs.read_text(spark, f"{base}/LATEST").strip() == "1"
+    assert not lakefs.exists(spark, f"{base}/v=2")
+
+
 def test_unindexed_unstatted_version_rewrites_everything(
     spark, sf_small, tmp_path
 ):

@@ -439,14 +439,14 @@ def test_delta_oversized_dv_relation_falls_back_to_shuffle(
     spark, sf_small, tmp_path, monkeypatch
 ):
     """Round-14 (verdict #7, Delta half): past
-    DV_BROADCAST_MAX_DELETE_ROWS — summed from the descriptors'
+    DELETE_BROADCAST_MAX_ROWS — summed from the descriptors'
     cardinality fields, before any bitmap decode — the deleted
     ordinals spill to a temp parquet one DV at a time and the
     anti-join plans WITHOUT the broadcast hint, so a foreign table
     shipping millions of DV rows can neither OOM the executors on a
     giant broadcast nor serialize millions of tuples through py4j.
     Results are identical on both strategies."""
-    from novelti_dingo_spark.sources import delta_log as dl
+    from novelti_dingo_spark.sources import tablecore
     from novelti_dingo_spark.sources.delta_log import (
         delete_rows_from_delta_table,
     )
@@ -466,7 +466,7 @@ def test_delta_oversized_dv_relation_falls_back_to_shuffle(
     )
     assert sorted(map(tuple, big.collect())) == want
 
-    monkeypatch.setattr(dl, "DV_BROADCAST_MAX_DELETE_ROWS", 0)
+    monkeypatch.setattr(tablecore, "DELETE_BROADCAST_MAX_ROWS", 0)
     small = read_delta_table(spark, base)
     # no hinted broadcast: the join side is now a parquet relation
     # whose strategy Catalyst picks from its SIZE stats (a tiny spill

@@ -866,11 +866,11 @@ def test_iceberg_delete_zero_hits_does_not_commit(spark, sf_small, tmp_path):
 def test_iceberg_oversized_delete_relation_falls_back_to_shuffle(
     spark, sf_small, tmp_path, monkeypatch
 ):
-    """Round-14 (verdict #7): past MOR_BROADCAST_MAX_DELETE_ROWS the
+    """Round-14 (verdict #7): past DELETE_BROADCAST_MAX_ROWS the
     broadcast hint is dropped so a foreign table carrying millions of
     delete rows plans a shuffle anti-join instead of OOMing the
     broadcast; results are identical either way."""
-    from novelti_dingo_spark.sources import iceberg as ice
+    from novelti_dingo_spark.sources import tablecore
     from novelti_dingo_spark.sources.iceberg import (
         delete_rows_from_iceberg_table,
     )
@@ -889,7 +889,7 @@ def test_iceberg_oversized_delete_relation_falls_back_to_shuffle(
     assert "BroadcastHashJoin" in big._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(tuple, big.collect())) == want
 
-    monkeypatch.setattr(ice, "MOR_BROADCAST_MAX_DELETE_ROWS", 0)
+    monkeypatch.setattr(tablecore, "DELETE_BROADCAST_MAX_ROWS", 0)
     small = read_iceberg_table(spark, base)
     plan = small._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(tuple, small.collect())) == want
@@ -1365,6 +1365,33 @@ def test_iceberg_rename_column_field_id_resolution(
         rename_iceberg_column(base, "nope", "x")
     with pytest.raises(IcebergError, match="already exists"):
         rename_iceberg_column(base, "s_name", "nation_id")
+
+
+def test_iceberg_changes_position_delete_survive_rename(spark, tmp_path):
+    """The change feed of a position delete scans the parent's files
+    rename-aware: after a later rename, the delete rows carry the
+    renamed column's values under the new name (not NULL), exactly as
+    a read of the parent snapshot shows them."""
+    from novelti_dingo_spark.sources.iceberg import (
+        delete_rows_from_iceberg_table,
+        read_iceberg_changes,
+        rename_iceberg_column,
+    )
+
+    base = str(tmp_path / "t")
+    s0 = write_iceberg_table(
+        spark.createDataFrame(
+            [(k, f"n{k}") for k in range(20)], "k long, name string"
+        ),
+        base,
+    )
+    s1 = delete_rows_from_iceberg_table(spark, base, "k % 5 = 0")
+    rename_iceberg_column(base, "name", "label")
+    got = sorted(
+        (r["k"], r["label"], r["_change_type"])
+        for r in read_iceberg_changes(spark, base, s0, s1).collect()
+    )
+    assert got == [(k, f"n{k}", "delete") for k in range(0, 20, 5)]
 
 
 def test_iceberg_add_drop_column_schema_evolution(

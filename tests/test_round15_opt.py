@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from novelti_dingo_spark.barrier import no_barriers
@@ -82,7 +83,7 @@ def test_iceberg_delete_size_guard_switches_join_strategy(
     guard must BROADCAST small delete relations (explicit hint — holds
     even with auto-broadcast off) and DROP the hint past the row
     threshold so the anti-join shuffles instead of OOMing executors."""
-    from novelti_dingo_spark.sources import iceberg
+    from novelti_dingo_spark.sources import tablecore
     from novelti_dingo_spark.sources.iceberg import (
         delete_rows_from_iceberg_table,
         read_iceberg_table,
@@ -100,7 +101,7 @@ def test_iceberg_delete_size_guard_switches_join_strategy(
         hinted = read_iceberg_table(spark, base)
         n_hinted = hinted.count()
         assert _anti_join_strategy(hinted) == "BroadcastHashJoin"
-        monkeypatch.setattr(iceberg, "MOR_BROADCAST_MAX_DELETE_ROWS", 0)
+        monkeypatch.setattr(tablecore, "DELETE_BROADCAST_MAX_ROWS", 0)
         unhinted = read_iceberg_table(spark, base)
         assert unhinted.count() == n_hinted  # same rows either way
         assert _anti_join_strategy(unhinted) in (
@@ -114,11 +115,11 @@ def test_delta_dv_size_guard_switches_join_strategy(
     spark, sf_small, tmp_path, monkeypatch
 ):
     """Delta half of the same guard: small DV ordinal sets broadcast
-    (explicit hint); past DV_BROADCAST_MAX_DELETE_ROWS the ordinals
+    (explicit hint); past DELETE_BROADCAST_MAX_ROWS the ordinals
     spill to parquet and Catalyst plans from the spill's stats — with
     auto-broadcast off that is a shuffle join, never a forced
     broadcast."""
-    from novelti_dingo_spark.sources import delta_log
+    from novelti_dingo_spark.sources import tablecore
     from novelti_dingo_spark.sources.delta_log import (
         delete_rows_from_delta_table,
         read_delta_table,
@@ -136,7 +137,7 @@ def test_delta_dv_size_guard_switches_join_strategy(
         hinted = read_delta_table(spark, base)
         n_hinted = hinted.count()
         assert _anti_join_strategy(hinted) == "BroadcastHashJoin"
-        monkeypatch.setattr(delta_log, "DV_BROADCAST_MAX_DELETE_ROWS", 0)
+        monkeypatch.setattr(tablecore, "DELETE_BROADCAST_MAX_ROWS", 0)
         spilled = read_delta_table(spark, base)
         assert spilled.count() == n_hinted
         assert _anti_join_strategy(spilled) in (
@@ -181,15 +182,8 @@ def test_mode_tie_break_is_deterministic(spark, tmp_path):
     assert got == {"X": "a", "Y": "z"}
 
 
-def test_iceberg_overwrite_diff_equals_exceptall(spark, sf_small, tmp_path):
-    """Round-15: the overwrite leg of read_iceberg_changes computes the
-    multiset diff as ONE signed-count aggregation (union ±1 → groupBy →
-    replicate |Δ|) instead of two exceptAll pipelines that scanned both
-    resolved snapshots twice. Pin exact multiset equality against the
-    exceptAll form on a real merge commit (which snapshots as an
-    overwrite)."""
-    from pyspark.sql import functions as F
-
+def _iceberg_merge_feed(spark, sf_small, tmp_path):
+    """A real Iceberg merge commit (which snapshots as an overwrite)."""
     from novelti_dingo_spark.sources.iceberg import (
         iceberg_snapshots,
         merge_into_iceberg_table,
@@ -213,20 +207,97 @@ def test_iceberg_overwrite_diff_equals_exceptall(spark, sf_small, tmp_path):
         spark, base, upd.select(*cols).unionAll(ins.select(*cols)),
         on=["s_suppkey"],
     )
-    snaps = iceberg_snapshots(base)
-    got = sorted(
-        tuple(r)
-        for r in read_iceberg_changes(
-            spark, base, snaps[0]["snapshot_id"]
-        ).collect()
+    s0, s1 = [x["snapshot_id"] for x in iceberg_snapshots(base)]
+    return (
+        read_iceberg_changes(spark, base, s0),
+        read_iceberg_table(spark, base, snapshot_id=s0),
+        read_iceberg_table(spark, base, snapshot_id=s1),
+        F.lit(int(s1)).cast("long").alias("_snapshot_id"),
     )
-    before = read_iceberg_table(
-        spark, base, snapshot_id=snaps[0]["snapshot_id"]
+
+
+# helper-name collision bait: the diff's own weight/sum columns are
+# spelled like these data columns
+_BAIT_SCHEMA = "k long, _w string, _d double"
+
+
+def _iceberg_overwrite_3to1_feed(spark, sf_small, tmp_path):
+    """An Iceberg overwrite that keeps one of three identical rows."""
+    from novelti_dingo_spark.sources.iceberg import (
+        read_iceberg_changes,
+        read_iceberg_table,
+        write_iceberg_table,
     )
-    after = read_iceberg_table(
-        spark, base, snapshot_id=snaps[1]["snapshot_id"]
+
+    base = str(tmp_path / "ice")
+    rest = [(2, "b", 1.0), (3, None, None)]
+    s0 = write_iceberg_table(
+        spark.createDataFrame([(1, "a", 0.5)] * 3 + rest, _BAIT_SCHEMA),
+        base,
     )
-    sid = snaps[1]["snapshot_id"]
+    s1 = write_iceberg_table(
+        spark.createDataFrame([(1, "a", 0.5)] + rest, _BAIT_SCHEMA),
+        base,
+        mode="overwrite",
+    )
+    return (
+        read_iceberg_changes(spark, base, s0),
+        read_iceberg_table(spark, base, snapshot_id=s0),
+        read_iceberg_table(spark, base, snapshot_id=s1),
+        F.lit(int(s1)).cast("long").alias("_snapshot_id"),
+    )
+
+
+def _home_cow_update_feed(spark, sf_small, tmp_path):
+    """A home-lake copy-on-write update commit (no row lineage)."""
+    from novelti_dingo_spark.pipelines import (
+        publish_versioned,
+        read_version,
+        table_changes,
+        update_rows_cow,
+    )
+
+    base = str(tmp_path / "lake")
+    v0 = publish_versioned(
+        spark.createDataFrame(
+            [(1, "a", 0.5)] * 3 + [(2, "b", 1.0), (3, None, None)],
+            _BAIT_SCHEMA,
+        ),
+        base,
+    )
+    v1, _, _ = update_rows_cow(
+        spark, base, "k", [1, 3], {"_d": F.col("_d") + 1.0}
+    )
+    return (
+        table_changes(spark, base, v0, v1),
+        read_version(spark, base, v0)[0],
+        read_version(spark, base, v1)[0],
+        F.lit(v1).cast("long").alias("_commit_version"),
+    )
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_iceberg_merge_feed, _iceberg_overwrite_3to1_feed, _home_cow_update_feed],
+    ids=["iceberg_merge", "iceberg_overwrite_3to1", "home_cow_update"],
+)
+def test_iceberg_overwrite_diff_equals_exceptall(
+    spark, sf_small, tmp_path, build
+):
+    """Commits without row lineage feed the change set from ONE
+    signed-count aggregation (tablecore.multiset_diff: union ±1 →
+    groupBy → replicate |Δ|) instead of two exceptAll pipelines that
+    scanned both resolved snapshots twice. Pin exact multiset equality
+    against the exceptAll form — also when data columns are named like
+    the diff's helper columns, and when a row goes from three copies to
+    one (exactly two delete rows) — and, on the home lake, that the
+    feed scans each snapshot once."""
+    feed, before, after, version = build(spark, sf_small, tmp_path)
+    if build is _home_cow_update_feed:  # the plan before AQE re-plans
+        plan = feed._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan") == 2, plan
+    cols = before.columns
+    got = sorted(map(tuple, feed.collect()))
     ref = (
         after.exceptAll(before)
         .select(*cols, F.lit("insert").alias("_change_type"))
@@ -234,10 +305,12 @@ def test_iceberg_overwrite_diff_equals_exceptall(spark, sf_small, tmp_path):
             before.exceptAll(after)
             .select(*cols, F.lit("delete").alias("_change_type"))
         )
-        .select("*", F.lit(int(sid)).cast("long").alias("_snapshot_id"))
+        .select("*", version)
     )
-    want = sorted(tuple(r) for r in ref.collect())
+    want = sorted(map(tuple, ref.collect()))
     assert got == want and len(got) > 0
+    if build is _iceberg_overwrite_3to1_feed:
+        assert [r[-2] for r in got] == ["delete", "delete"]
 
 
 def test_percentile_order_stats_ignore_nulls(spark, tmp_path):
@@ -252,7 +325,9 @@ def test_percentile_order_stats_ignore_nulls(spark, tmp_path):
     rows = [
         ("A", float(q), float(p))
         for q, p in [(1, 10.0), (2, 20.0), (3, 30.0), (4, 40.0)]
-    ] + [("A", 5.0, None), ("B", 1.0, 7.0), ("B", 2.0, None)]
+    ] + [("A", 5.0, None), ("B", 1.0, 7.0), ("B", 2.0, None)] + [
+        ("C", 3.0, None)  # all-NULL group: kept, NULL percentiles
+    ]
     li = spark.createDataFrame(
         rows, "l_returnflag string, l_quantity double, l_extendedprice double"
     )

@@ -881,9 +881,10 @@ EXPECT = {
         "partial_agg": True, "no_python_udf": True,
     },
     # incremental read: per-commit file routing happened DRIVER-side;
-    # append scan + ordinal semi-join + two-phase agg
+    # append scan + broadcast ordinal semi-join + two-phase agg
     "iceberg_changes_agg": {
         "partial_agg": True, "no_python_udf": True,
+        "broadcast_joins": 2, "plan_must_contain": ["LeftSemi"],
     },
     # column mapping: physical->logical projection is a scan-side
     # alias; the plan is a plain two-commit scan + two-phase agg
@@ -904,10 +905,10 @@ EXPECT = {
     "delta_merge_agg": {
         "partial_agg": True, "no_python_udf": True,
     },
-    # Iceberg MERGE: change derivation = two resolved snapshot scans
-    # (exceptAll both ways) + two-phase agg
+    # Iceberg MERGE: change derivation = one signed-count multiset diff
+    # over the two resolved snapshots (one exchange) + two-phase agg
     "iceberg_merge_agg": {
-        "partial_agg": True, "no_python_udf": True,
+        "partial_agg": True, "no_python_udf": True, "max_exchanges": 8,
     },
     # RESTORE / ROLLBACK: two snapshot reads unioned + two-phase agg
     "delta_restore_agg": {
