@@ -155,6 +155,23 @@ def kmeans_fit(vectors: DataFrame, k: int = K, iterations: int = ITERATIONS) -> 
     return barrier(centroids)
 
 
+def model_frame(spark: SparkSession, schema: str, columns: dict) -> DataFrame:
+    """A driver-built model (centroids, codebooks, a query's LUT) as an
+    Arrow-built LocalRelation: the values live in the plan, so every
+    reference reads them inside the JVM. A list-built createDataFrame
+    is a LogicalRDD whose rows are re-fed from this Python process at
+    every reference. `columns` maps each field of the DDL `schema` to
+    its list of values."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    st = StructType.fromDDL(schema)
+    return spark.createDataFrame(
+        pa.table(columns, schema=to_arrow_schema(st)), st
+    )
+
+
 def kmeans_fit_numpy(
     vectors: DataFrame,
     k: int = K,
@@ -178,11 +195,12 @@ def kmeans_fit_numpy(
     kmeans_fit: the k lowest-(xxhash64(vec_id), vec_id) vectors (the
     sample IS that ordering's prefix, so the init set is identical);
     argmin ties break to the lowest cid; empty cells keep their
-    previous centroid. Returns (cid, centroid) like kmeans_fit —
-    centroid VALUES differ from the exact trainer at sample < corpus
-    (different data) and at ulp level otherwise (numpy mean vs
-    shuffled avg fold order), so pick ONE trainer per index and keep
-    its train-per-call twin on the same one."""
+    previous centroid. Returns (cid, centroid) like kmeans_fit, as an
+    Arrow-built LocalRelation (`model_frame`); an empty input gives an
+    empty model. Centroid VALUES differ from the exact trainer at
+    sample < corpus (different data) and at ulp level otherwise (numpy
+    mean vs shuffled avg fold order), so pick ONE trainer per index
+    and keep its train-per-call twin on the same one."""
     import numpy as np
 
     from .hash_sample import collect_hash_sample
@@ -194,6 +212,11 @@ def kmeans_fit_numpy(
         sample if sample is not None else 256 * k,
         n=n,
     )
+    schema = "cid int, centroid array<double>"
+    if not samp:
+        return model_frame(
+            vectors.sparkSession, schema, {"cid": [], "centroid": []}
+        )
     x = np.array([r.emb for r in samp], dtype=np.float64)
     k_eff = min(k, len(x))
     cb = x[:k_eff].copy()
@@ -214,9 +237,10 @@ def kmeans_fit_numpy(
             mask = a == c
             if mask.any():
                 cb[c] = x[mask].mean(axis=0)
-    return vectors.sparkSession.createDataFrame(
-        [(c, [float(v) for v in cb[c]]) for c in range(k_eff)],
-        "cid int, centroid array<double>",
+    return model_frame(
+        vectors.sparkSession,
+        schema,
+        {"cid": list(range(k_eff)), "centroid": cb.tolist()},
     )
 
 

@@ -244,10 +244,13 @@ def pq_fit_numpy(
     via hash_sample's threshold filter — the corpus-wide
     orderBy().limit() TakeOrdered this replaced serialized on a
     single-threaded driver merge at large partition counts (the
-    measured 1M composed-build tail)."""
+    measured 1M composed-build tail). The model is an Arrow-built
+    LocalRelation (`ivf.model_frame`); an empty input gives an empty
+    model."""
     import numpy as np
 
     from .hash_sample import collect_hash_sample
+    from .ivf import model_frame
 
     samp = collect_hash_sample(
         vectors.select(
@@ -256,9 +259,12 @@ def pq_fit_numpy(
         sample if sample is not None else 256 * k,
         n=n,
     )
+    schema = "m int, cid int, centroid array<double>"
+    model: dict[str, list] = {"m": [], "cid": [], "centroid": []}
+    if not samp:
+        return model_frame(vectors.sparkSession, schema, model)
     x = np.array([r.emb for r in samp], dtype=np.float64)
     k_eff = min(k, len(x))
-    rows = []
     for m in range(M):
         sub = np.ascontiguousarray(x[:, m * SUBDIM:(m + 1) * SUBDIM])
         cb = sub[:k_eff].copy()
@@ -273,12 +279,10 @@ def pq_fit_numpy(
                 mask = a == c
                 if mask.any():
                     cb[c] = sub[mask].mean(axis=0)
-        rows.extend(
-            (m, c, [float(v) for v in cb[c]]) for c in range(k_eff)
-        )
-    return vectors.sparkSession.createDataFrame(
-        rows, "m int, cid int, centroid array<double>"
-    )
+        model["m"] += [m] * k_eff
+        model["cid"] += list(range(k_eff))
+        model["centroid"] += cb.tolist()
+    return model_frame(vectors.sparkSession, schema, model)
 
 
 @register(
@@ -468,6 +472,72 @@ def ivf_pq_knn_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_pq_knn(spark, sf_dir, k=10)
 
 
+# the coarse cells as one struct array: ivf._assign's broadcast shape
+_CELLS = "array<struct<cid:int,centroid:array<double>>>"
+
+
+def _nearest_cell():
+    """ivf._assign's nearest-cell expression over the `_cells` column of
+    a broadcast model row — array_min over (dist, cid) structs, same
+    `_sq_dist` fold — with the cell's centroid carried along, so the
+    residual needs no second lookup."""
+    from .ivf import _sq_dist as ivf_sq_dist
+
+    return F.array_min(
+        F.transform(
+            F.col("_cells"),
+            lambda c: F.struct(
+                ivf_sq_dist("embedding", c.getField("centroid"))
+                .alias("dist"),
+                c.getField("cid").alias("cid"),
+                c.getField("centroid").alias("centroid"),
+            ),
+        )
+    )
+
+
+def _adc_sum():
+    """Σ_m LUT[m, code_m] over the `_lut`/`_cbs` columns of a broadcast
+    model row and the row's nearest `_cell`. Residual subvector m is
+    the embedding's slice minus the cell centroid's slice (the same
+    doubles as slicing the residual); code_m is pq._assign's
+    (dist, cid)-ordered argmin of `_sq_dist(sub, centroid)` over
+    subspace m's codebook. The terms
+    fold left to right from 0.0 (0.0 + t_0 + … + t_7), the order of
+    the Sum aggregate in ivf_pq_knn's groupBy ADC. Each stage is a
+    higher-order function's ARRAY argument, which Spark evaluates once
+    per row; an expression inside a lambda body is re-evaluated per
+    element."""
+    subs = F.transform(
+        F.sequence(F.lit(0), F.lit(M - 1)),
+        lambda m: F.zip_with(
+            F.slice(
+                F.col("embedding").cast("array<double>"),
+                m * SUBDIM + 1, SUBDIM,
+            ),
+            F.slice(F.col("_cell.centroid"), m * SUBDIM + 1, SUBDIM),
+            lambda x, c: x - c,
+        ),
+    )
+    codes = F.zip_with(
+        subs,
+        F.col("_cbs"),
+        lambda sub, cents: F.array_min(
+            F.transform(
+                cents,
+                lambda c: F.struct(
+                    _sq_dist(sub, c.getField("centroid")).alias("dist"),
+                    c.getField("cid").alias("cid"),
+                ),
+            )
+        ).getField("cid"),
+    )
+    terms = F.zip_with(
+        codes, F.col("_lut"), lambda code, row: F.element_at(row, code + 1)
+    )
+    return F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)
+
+
 def ivf_pq_residual_knn(
     spark: SparkSession,
     sf_dir: str,
@@ -478,104 +548,110 @@ def ivf_pq_residual_knn(
     """Residual IVF-PQ core, nprobe-parameterized. With rerank > 0 the
     ADC pass only SHORTLISTS `rerank` candidates, which are re-scored
     with exact float cosine (the pq_rerank_top10 pattern composed with
-    cell pruning) — the production configuration."""
-    from .ivf import N_PROBE, _assign as ivf_assign, _sq_dist, kmeans_fit
+    cell pruning) — the production configuration.
+
+    Train once on the driver, score in one corpus pass: the coarse
+    cells train with kmeans_fit_numpy and the residual codebooks with
+    pq_fit_numpy over the residual projection — one hash-sample
+    collect each. Both trainers see the whole corpus while n ≤ 256·k
+    (2048 vectors for the coarse cells, 4096 for the codebooks); above
+    that they train on the publishers' 256·k lowest-xxhash64 sample.
+    An empty Lloyd's cell keeps its previous centroid. The query's
+    routing, M×K LUT and per-cell q·centroid come from the serve
+    path's `_query_probe_and_lut`, and the models ride into the scan
+    as one broadcast Arrow-built row. Per corpus row: nearest cell
+    (ivf._assign's argmin, centroid carried), probed-cell filter,
+    residual, per-subspace pq._assign code, and
+    pq_sim = round(q·centroid + (t_0 + … + t_7), 6) — the sum order of
+    the groupBy ADC in ivf_pq_knn. The top-k is a
+    TakeOrderedAndProject: no shuffle, and the only join is the
+    one-row model broadcast. No vector 0 (or no rows) → no rows."""
+    from .ivf import N_PROBE, kmeans_fit_numpy, model_frame
 
     if n_probe is None:
         n_probe = N_PROBE
     e = load_table(spark, sf_dir, "embeddings")
-    cells = kmeans_fit(e)
-    # (vec_id, ivf_cid, residual) — residual = x − cell centroid
-    assigned = ivf_assign(e, cells)
-    with_res = (
-        assigned.join(
-            F.broadcast(cells.select(F.col("cid"), F.col("centroid"))),
-            "cid",
+    out = "cos_sim" if rerank else "pq_sim"
+    q = (
+        e.filter(F.col("vec_id") == 0)
+        .select(F.col("embedding").cast("array<double>").alias("q"))
+        .head()
+    )
+    if q is None or q.q is None:
+        empty = F.lit(None).cast("double").alias(out)
+        return e.select("vec_id", empty).limit(0)
+    n = e.count()  # metadata-only on the parquet scan
+    cells = sorted(
+        (r.cid, list(r.centroid)) for r in kmeans_fit_numpy(e, n=n).collect()
+    )
+    cell_row = {"_cells": [[{"cid": c, "centroid": v} for c, v in cells]]}
+    res = (
+        e.crossJoin(
+            F.broadcast(model_frame(spark, f"_cells {_CELLS}", cell_row))
         )
+        .select("vec_id", "embedding", _nearest_cell().alias("_cell"))
         .select(
             "vec_id",
-            F.col("cid").alias("ivf_cid"),
             F.zip_with(
                 F.col("embedding").cast("array<double>"),
-                "centroid",
+                F.col("_cell.centroid"),
                 lambda x, c: x - c,
             ).alias("embedding"),
         )
     )
-    # PQ on residuals (subvectors() reads the `embedding` column)
-    codebooks = pq_fit(with_res.select("vec_id", "embedding"))
-    codes = _assign(
-        subvectors(with_res.select("vec_id", "embedding")), codebooks
-    ).select("vec_id", "m", "cid")
-    cell_of = with_res.select("vec_id", "ivf_cid")
-
-    q_emb = e.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").cast("array<double>").alias("q_emb")
+    cb_rows = pq_fit_numpy(res, n=n).collect()
+    kk = 1 + max(r.cid for r in cb_rows)
+    cbs = [[None] * kk for _ in range(M)]
+    for r in cb_rows:
+        cbs[r.m][r.cid] = list(r.centroid)
+    _, _, _, lut, cdot = _query_probe_and_lut(
+        q.q, M, kk, SUBDIM, True, cells, cbs, None, n_probe
     )
-    # probe cells + per-cell constant q·centroid
-    cell_scores = (
-        cells.crossJoin(F.broadcast(q_emb))
+    model = model_frame(
+        spark,
+        f"_cells {_CELLS}, _cbs array<{_CELLS}>, _lut array<array<double>>, "
+        "_cdot map<int,double>, _q array<double>",
+        {
+            **cell_row,
+            "_cbs": [[
+                [{"cid": c, "centroid": v} for c, v in enumerate(cbs[m])]
+                for m in range(M)
+            ]],
+            "_lut": [lut],
+            "_cdot": [list(cdot.items())],
+            "_q": [q.q],
+        },
+    )
+    top = (
+        e.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(model.drop("_q")))
+        .select("vec_id", "embedding", "_cbs", "_lut", "_cdot",
+                _nearest_cell().alias("_cell"))
+        .filter(F.map_contains_key("_cdot", F.col("_cell.cid")))
         .select(
-            F.col("cid").alias("ivf_cid"),
-            _sq_dist("centroid", "q_emb").alias("dist"),
-            F.aggregate(
-                F.zip_with("centroid", "q_emb", lambda c, qq: c * qq),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("q_dot_centroid"),
-        )
-    )
-    probe = (
-        cell_scores.orderBy("dist", "ivf_cid")
-        .limit(n_probe)
-        .select("ivf_cid", "q_dot_centroid")
-    )
-    q = subvectors(e.filter(F.col("vec_id") == 0)).select(
-        "m", F.col("sub").alias("q_sub")
-    )
-    lut = codebooks.join(F.broadcast(q), "m").select(
-        "m",
-        "cid",
-        F.aggregate(
-            F.zip_with("centroid", "q_sub", lambda c, qq: c * qq),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("partial"),
-    )
-    survivors = (
-        cell_of.join(F.broadcast(probe), "ivf_cid")
-        .filter(F.col("vec_id") != 0)
-        .select("vec_id", "q_dot_centroid")
-    )
-    adc = (
-        codes.join(F.broadcast(survivors), "vec_id")
-        .join(F.broadcast(lut), ["m", "cid"])
-        .groupBy("vec_id")
-        .agg(
+            "vec_id",
             F.round(
-                F.first("q_dot_centroid") + F.sum("partial"), 6
-            ).alias("pq_sim")
+                F.element_at("_cdot", F.col("_cell.cid")) + _adc_sum(),
+                6,
+            ).alias("pq_sim"),
         )
+        .orderBy(F.desc("pq_sim"), F.asc("vec_id"))
     )
     if not rerank:
-        return adc.orderBy(F.desc("pq_sim"), F.asc("vec_id")).limit(k)
-    shortlist = (
-        adc.orderBy(F.desc("pq_sim"), F.asc("vec_id"))
-        .limit(rerank)
-        .select("vec_id")
-    )
+        return top.limit(k)
     exact = F.aggregate(
         F.zip_with(
             F.col("embedding").cast("array<double>"),
-            F.col("q_emb"),
+            F.col("_q"),
             lambda a, b: a * b,
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+    shortlist = top.limit(rerank).select("vec_id")
     return (
         e.join(F.broadcast(shortlist), "vec_id", "left_semi")
-        .crossJoin(F.broadcast(q_emb))
+        .crossJoin(F.broadcast(model.select("_q")))
         .select("vec_id", F.round(exact, 6).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
@@ -597,10 +673,14 @@ def ivf_pq_residual_knn_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scoring stays LUT-only by linearity of the dot product:
         q·x̂ = q·centroid(cell) + Σ_m LUT[m, code_m]
-    The q·centroid term is one broadcast k-row table; the residual LUT is
-    the same 128-row broadcast as before. Nothing about the scan changes:
-    codes + two tiny broadcasts, float vectors never read at query time.
-    The ivf_pq_residual_knn core parameterizes nprobe and an optional
+    This train-per-call query has no published codes, so its one corpus
+    pass encodes each vector on the fly: the trained cells, codebooks,
+    the query's 128-entry LUT and its probed cells' q·centroid ride in
+    as one broadcast model row, and each row is routed, filtered to the
+    probed cells, residual-encoded and scored in a single projection
+    under a TakeOrderedAndProject (the published-index path,
+    ivfpq_knn_from_index, scans stored codes instead). The
+    ivf_pq_residual_knn core parameterizes nprobe and an optional
     exact-rerank stage; SCALE.md records the measured recall curve."""
     return ivf_pq_residual_knn(spark, sf_dir, k=10)
 

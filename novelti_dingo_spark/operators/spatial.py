@@ -592,46 +592,20 @@ def _pip_edges_array_sql(verts: list[tuple[float, float]]) -> str:
     return "array(" + ", ".join(items) + ")"
 
 
-def pip_crossings_hof_sql(
-    px: str, py: str, verts: list[tuple[float, float]]
-) -> str:
-    """Spark-side twin of pip_crossings_sql with the per-edge terms
-    FOLDED through `aggregate()` over a literal edge array instead of
-    unrolled into one giant expression.
-
-    Why: the unrolled form — 11 edges x (span check + cross product),
-    duplicated per polygon inside the pid CASE — pushed the fused
-    scan->project->filter->partial-agg method past Janino's 64 KB
-    limit, and Spark silently fell back to INTERPRETED execution for
-    the whole stage (round-8 verdict #3: `hashAgg_doAggregateWithKeys_0
-    ... Code grows beyond 64 KB`). The HOF keeps the stage's generated
-    code tiny (one expression call site), so everything around it —
-    scan, hash aggregate — stays whole-stage-compiled; the audit runs
-    this query under spark.sql.codegen.fallback=false to prove it.
-
-    Exactness: identical arithmetic on identical doubles — the edge
-    coordinates are the same literals, and (x2-x1)*(py-y1) -
-    (px-x1)*(y2-y1) is pure *,- on exact doubles, deterministic
-    whether constant-folded (unrolled oracle) or computed per-edge at
-    runtime (this fold). The crossing count is an integer, so the
-    DuckDB oracle keeps the unrolled text and still hash-matches."""
-    edges = _pip_edges_array_sql(verts)
-    cross = f"((e.x2 - e.x1) * (({py}) - e.y1) - (({px}) - e.x1) * (e.y2 - e.y1))"
-    return (
-        f"aggregate({edges}, 0, (acc, e) -> acc + (CASE WHEN "
-        f"(e.y1 < e.y2 AND e.y1 <= ({py}) AND ({py}) < e.y2 AND {cross} > 0.0D)"
-        f" OR "
-        f"(e.y2 < e.y1 AND e.y2 <= ({py}) AND ({py}) < e.y1 AND {cross} < 0.0D)"
-        f" THEN 1 ELSE 0 END))"
-    )
-
-
 def _pip_crossings_col(px: Column, py: Column, verts) -> Column:
-    """Column-API twin of pip_crossings_hof_sql: fold the literal edge
-    array with the SAME per-edge arithmetic ((x2-x1)*(py-y1) -
-    (px-x1)*(y2-y1), strict span checks) — identical ops on identical
-    doubles, so the integer crossing count is bit-equal to the SQL-text
-    form. Takes the point as Columns so the caller can hand it LAMBDA
+    """Spark-side twin of pip_crossings_sql with the per-edge terms
+    FOLDED through `aggregate()` over the literal edge array instead of
+    unrolled into one giant expression. The unrolled form — 11 edges x
+    (span check + cross product), duplicated per polygon inside the pid
+    CASE — pushed the fused scan->project->filter->partial-agg method
+    past Janino's 64 KB limit, and Spark silently fell back to
+    INTERPRETED execution for the whole stage; the fold keeps the
+    stage's generated code small.
+
+    Same per-edge arithmetic ((x2-x1)*(py-y1) - (px-x1)*(y2-y1),
+    strict span checks) — identical ops on identical doubles, so the
+    integer crossing count is bit-equal to the unrolled oracle text.
+    Takes the point as Columns so the caller can hand it LAMBDA
     VARIABLES instead of full expressions."""
     edges = F.expr(_pip_edges_array_sql(verts))
 
@@ -769,7 +743,7 @@ POLY_CELL = 1.0  # blocking grid (degrees) for polygon bounding boxes
 def pip_crossings_edges_sql(px: str, py: str, edges: str) -> str:
     """Ray-cast crossing count with the edges supplied as an expression
     (a COLUMN of array<struct<x1,y1,x2,y2>> from the polygon table, or
-    a literal array) — the generic form behind pip_crossings_hof_sql.
+    a literal array) — the SQL-text form of _pip_crossings_col's fold.
     Same division-free polynomial as the unrolled oracle text, folded
     through aggregate() so the stage codegen stays small."""
     cross = (

@@ -203,6 +203,23 @@ def test_ivf_batch_serve_window_has_native_group_limit(
     assert "MapInPandas" not in plan and "ArrowEval" not in plan
 
 
+def test_kmeans_fit_numpy_empty_input_returns_empty_model(
+    spark, sf_small, tmp_path
+):
+    """The sampled coarse trainer on an empty input returns an empty
+    model with the schema of a trained one."""
+    from novelti_dingo_spark import schemas
+    from novelti_dingo_spark.operators.ivf import kmeans_fit_numpy
+
+    spark.createDataFrame([], schemas.TABLES["embeddings"]).write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    model = kmeans_fit_numpy(load_table(spark, str(tmp_path), "embeddings"))
+    trained = kmeans_fit_numpy(load_table(spark, sf_small, "embeddings"))
+    assert model.schema == trained.schema
+    assert model.collect() == []
+
+
 def test_assign_vectorized_matches_literal_and_routes_by_k(spark, sf_small):
     """Round-14 (verdict #4 enabler): assign_literal's O(k·dim)-literal
     plan is interpreted past codegen limits — a 200k-row assignment at

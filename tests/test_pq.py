@@ -5,6 +5,7 @@ far above chance, and exact rerank scores."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from novelti_dingo_spark.operators.pq import (
@@ -376,10 +377,11 @@ def test_ivfpq_index_served_probe_and_rerank(spark, sf_small, tmp_path):
         assert cell_of[r.vec_id] in probed
 
 
-def _emb_fixture(tmp_path, corpus: "np.ndarray") -> str:
+def _emb_fixture(tmp_path, corpus: "np.ndarray", first_id: int = 0) -> str:
     """Write a synthetic embeddings.parquet shaped like the testdata
     (vec_id long, embedding list<float32>, label int32) so load_table /
-    publish_ivfpq_index treat the dir as an sf_dir."""
+    publish_ivfpq_index treat the dir as an sf_dir. Vector ids run from
+    `first_id`."""
     import pyarrow as pa
     import pyarrow.parquet as pq_
 
@@ -387,7 +389,9 @@ def _emb_fixture(tmp_path, corpus: "np.ndarray") -> str:
     d.mkdir(exist_ok=True)
     tbl = pa.table(
         {
-            "vec_id": pa.array(range(len(corpus)), pa.int64()),
+            "vec_id": pa.array(
+                range(first_id, first_id + len(corpus)), pa.int64()
+            ),
             "embedding": pa.array(
                 corpus.astype(np.float32).tolist(), pa.list_(pa.float32())
             ),
@@ -453,6 +457,120 @@ def test_ivfpq_residual_index_served_numpy_exact(spark, sf_small, tmp_path):
             sub = q[m * SUBDIM:(m + 1) * SUBDIM]
             want += fold_dot(cbs[(m, codes[r.vec_id][m])], sub)
         assert r.pq_sim == round(want, 6)
+
+
+def test_residual_knn_one_pass_numpy_exact_and_job_count(spark, sf_small):
+    """The train-per-call residual IVF-PQ query trains with
+    kmeans_fit_numpy and pq_fit_numpy and scores in one corpus pass.
+    Rebuilding its model from the two trainers, every candidate's score
+    is round(q·centroid(cell) + (t_0 + … + t_7), 6) with every float
+    fold left to right, the rows are the top-10 of the probed cells,
+    and the query runs in at most 10 Spark jobs."""
+    from novelti_dingo_spark.operators.ivf import N_PROBE, kmeans_fit_numpy
+    from novelti_dingo_spark.operators.pq import (
+        ivf_pq_residual_knn_top10,
+        pq_fit_numpy,
+    )
+
+    sc = spark.sparkContext
+    group = "test-residual-knn-one-pass"
+    sc.setJobGroup(group, group)
+    try:
+        got = ivf_pq_residual_knn_top10(spark, sf_small).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 10, n_jobs
+
+    def fold_dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    def fold_sqd(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            d = x - y
+            acc += d * d
+        return acc
+
+    e = load_table(spark, sf_small, "embeddings")
+    n = e.count()
+    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in e.collect()}
+    q = vecs[0]
+    cells = {
+        r.cid: list(r.centroid) for r in kmeans_fit_numpy(e, n=n).collect()
+    }
+    cell_of = {
+        v: min((fold_sqd(x, c), cid) for cid, c in cells.items())[1]
+        for v, x in vecs.items()
+    }
+    res = {
+        v: [a - b for a, b in zip(x, cells[cell_of[v]])]
+        for v, x in vecs.items()
+    }
+    res_df = spark.createDataFrame(
+        sorted(res.items()), "vec_id long, embedding array<double>"
+    )
+    cbs = {
+        (r.m, r.cid): list(r.centroid)
+        for r in pq_fit_numpy(res_df, n=n).collect()
+    }
+    probed = {
+        cid
+        for _, cid in sorted(
+            (fold_sqd(c, q), cid) for cid, c in cells.items()
+        )[:N_PROBE]
+    }
+    want = {}
+    for v in vecs:
+        if v == 0 or cell_of[v] not in probed:
+            continue
+        adc = 0.0
+        for m in range(M):
+            sub = res[v][m * SUBDIM:(m + 1) * SUBDIM]
+            code = min(
+                (fold_sqd(sub, cbs[(m, c)]), c) for c in range(K)
+            )[1]
+            adc += fold_dot(cbs[(m, code)], q[m * SUBDIM:(m + 1) * SUBDIM])
+        want[v] = round(fold_dot(cells[cell_of[v]], q) + adc, 6)
+    top = sorted(want, key=lambda v: (-want[v], v))[:10]
+    assert [r.vec_id for r in got] == top
+    for r in got:
+        assert r.pq_sim == want[r.vec_id]
+
+
+@pytest.mark.parametrize(
+    "first_id,n_vectors", [(1, 40), (0, 0)], ids=["no_vector_0", "empty"]
+)
+def test_residual_knn_without_query_vector_is_empty(
+    spark, tmp_path, first_id, n_vectors
+):
+    """An embeddings table without vector 0 (or without rows) has no
+    query to rank for: the residual IVF-PQ query returns no rows, with
+    the (vec_id bigint, pq_sim double) schema."""
+    from novelti_dingo_spark.operators.pq import ivf_pq_residual_knn_top10
+
+    corpus = np.random.default_rng(3).standard_normal((n_vectors, 64))
+    sf = _emb_fixture(tmp_path, corpus, first_id=first_id)
+    df = ivf_pq_residual_knn_top10(spark, sf)
+    assert df.schema.simpleString() == "struct<vec_id:bigint,pq_sim:double>"
+    assert df.collect() == []
+
+
+def test_pq_fit_numpy_empty_input_returns_empty_model(
+    spark, sf_small, tmp_path
+):
+    """The sampled PQ trainer on an empty input returns an empty model
+    with the schema of a trained one."""
+    from novelti_dingo_spark.operators.pq import pq_fit_numpy
+
+    sf = _emb_fixture(tmp_path, np.zeros((0, 64)))
+    model = pq_fit_numpy(load_table(spark, sf, "embeddings"))
+    trained = pq_fit_numpy(load_table(spark, sf_small, "embeddings"))
+    assert model.schema == trained.schema
+    assert model.collect() == []
 
 
 def test_residual_index_recall_beats_raw_on_clustered_corpus(

@@ -64,6 +64,21 @@ def test_ppjoin_audit_plan_skips_bounds_probe(spark, sf_small):
     assert "bit_count" not in plan, plan
 
 
+def test_ppjoin_barrier_plan_takes_bitmap_verify(spark, sf_small):
+    """The executed shape (barriers on) is the one plan audits never
+    see: on the small-vocabulary fixture the verify takes the bitmap
+    branch, so the plan carries bit_count, no array_intersect, and no
+    Python UDF."""
+    from novelti_dingo_spark.operators import dedup
+    from novelti_dingo_spark.plans import explain_formatted
+
+    plan = explain_formatted(dedup.jaccard_pairs_prefix_filter(spark, sf_small))
+    assert "bit_count" in plan, plan
+    assert "array_intersect" not in plan, plan
+    for udf in ("PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+        assert udf not in plan, plan
+
+
 def _anti_join_strategy(df) -> str:
     """Name of the physical join node executing the MOR anti-join."""
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -987,9 +987,15 @@ EXPECT = {
         "broadcast_joins": 8, "take_ordered": True, "partial_agg": True,
         "no_python_udf": True,
     },
+    # the residual query trains on the driver and scores in one corpus
+    # pass against a broadcast model row: no groupBy and no shuffle, so
+    # its pins are the serve shape (one 2-column scan, top-k, no
+    # exchange or shuffled join)
     "ivf_pq_residual_knn_top10": {
-        "broadcast_joins": 8, "take_ordered": True, "partial_agg": True,
-        "no_python_udf": True,
+        "take_ordered": True, "no_python_udf": True, "max_scan_cols": 2,
+        "plan_must_not_contain": [
+            "hashpartitioning", "SortMergeJoin", "ShuffledHashJoin",
+        ],
     },
     "pq_knn_top10": {
         "broadcast_joins": 8, "take_ordered": True, "partial_agg": True,
