@@ -232,15 +232,28 @@ def jaccard_pairs_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     land at the END of the rarity order, never generate candidates — the
     exact counterpart of dropping boilerplate LSH buckets.
 
-    Shape: df groupBy (vocab-sized, two-phase) → rank join → per-doc
-    prefix via row_number ≤ p → equi-join on prefix gram with the FULL
-    PPJoin pruning stack → verify ONLY candidates (each pair exactly
-    once): fixed-width bitmaps + popcount when the interned vocabulary
-    is small (≤ 64·BITMAP_MAX_WORDS grams — this corpus: 931 grams,
-    W=15 words), array_intersect on the interned arrays otherwise. No
-    GEMM, no all-pairs: candidate volume is bounded by prefix-gram
-    collisions AFTER length + positional pruning, and verification is
-    |candidates|, not n².
+    Shape: one driver action, then one lazy plan. The vocabulary
+    (gram, df) is vocab-sized, so it is collected once and sorted on
+    the driver by (df, gram) — Python's code-point str order is
+    Spark's UTF-8 byte order — and each gram's position in that order
+    becomes its dense id `gid`. The (gram, gid) table goes back as a
+    LocalRelation and is broadcast into the corpus. Each doc becomes
+    ONE record: array_sort(collect_list(gid)). Since gid follows the
+    rarity order, that sorted array IS the prefix order, so the prefix
+    is a posexplode of its first |x| - ceil(τ·|x|) + 1 elements. The
+    per-doc grouping sits behind keyed_widen: without the explicit
+    doc_id repartition AQE coalesces the bench-scale groupBy to one
+    partition, and the candidate join then runs in one task. Prefix
+    grams feed an equi-join on gid with the FULL PPJoin pruning stack;
+    verification runs ONLY on candidates (each pair exactly once):
+    fixed-width bitmaps + popcount when the vocabulary spans ≤
+    BITMAP_MAX_WORDS 64-bit words (this corpus: 931 grams, 15 words),
+    array_intersect on the gid arrays otherwise. Every subtree is
+    deterministic, so the per-doc record is computed once and AQE
+    reuses its exchanges across the prefix and both verify sides — no
+    checkpoint. No GEMM, no all-pairs: candidate volume is bounded by
+    prefix-gram collisions AFTER length + positional pruning, and
+    verification is |candidates|, not n².
 
     Why the extra PPJoin filters (round-9 profile at sf0.1): the bare
     prefix join emitted 7.9M candidates from 5k docs — 63% of
@@ -262,7 +275,9 @@ def jaccard_pairs_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (p·n + q − 1) div q): no float boundary can over-prune."""
     from fractions import Fraction
 
-    from pyspark.sql import Window
+    from ..barrier import _ENABLED as _barriers_on
+    from ..sources.io import keyed_widen
+    from .ivf import model_frame
 
     tau = Fraction(str(JACCARD_THRESHOLD))
     p_, q_ = tau.numerator, tau.denominator
@@ -270,67 +285,43 @@ def jaccard_pairs_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ap_, aq_ = p_, p_ + q_
 
     # widen: fan the per-doc bigram HOF out of the one-partition scan
-    # (round-14; aggregates downstream are counts/intersections — order-
-    # insensitive)
+    # (aggregates downstream are counts/intersections — order-
+    # insensitive). explode_outer + IS NOT NULL, not explode: explode
+    # makes Catalyst infer size(grams) > 0 on the HOF and push it below
+    # widen's exchange, onto the one-partition scan.
     d = widen(load_table(spark, sf_dir, "documents")).select(
         "doc_id", F.array_distinct(token_bigrams("text")).alias("grams")
     )
-    g = d.select("doc_id", F.explode("grams").alias("gram"))
-    # gram interning: a dense long id per vocabulary entry (bijective,
-    # so every downstream count is identical to the string form) — the
-    # candidate join then hashes LONGS and verification intersects int
-    # arrays instead of strings (measured ~1.7× off the string-keyed
-    # verify at sf0.1). The prefix ORDER stays (df, gram), so the
-    # chosen prefixes are deterministic across runs.
-    # gid must be DETERMINISTIC: dfreq is instantiated in two independent
-    # plan subtrees (broadcast into `ranked` for candidate generation and
-    # into `d_ids` for verification), so a nondeterministic id source
-    # (monotonically_increasing_id) could map the same gram to different
-    # ids in the two instantiations. with_global_rank over the unique
-    # `gram` key is a pure function of the data — every instantiation
-    # (and every task retry) produces the identical bijective mapping.
-    from .rank import with_global_rank
-
-    # Round-14 (guide §3.3/§5 — materialize multiply-referenced
-    # intermediates to truncate the plan): with_global_rank fences its
-    # local row number behind monotonically_increasing_id, which is
-    # NONDETERMINISTIC, so Catalyst can never prove the dfreq / prefix /
-    # d_ids subtrees equal across their 2 instantiations each —
-    # measured executed plan at sf0.1: 12 parquet scans, 28 exchanges,
-    # 0 ReusedExchange; every noop execution re-derived the corpus
-    # explode + vocab rank up to 12×. localCheckpoint each shared
-    # intermediate ONCE per invocation (computed fresh from parquet on
-    # every call — nothing persists across runs): the checkpoint both
-    # deduplicates the subtree and cuts the nondeterministic lineage, so
-    # every instantiation reads the identical materialized rows (the gid
-    # mapping was already deterministic-by-value; now it is shared by
-    # construction). After: 0 scans in the executed verify plan (all
-    # inputs checkpoint-backed), end-to-end 36.2 s → ~8 s.
-    dfreq = barrier(with_global_rank(
-        g.groupBy("gram").agg(F.count(F.lit(1)).alias("df")),
-        ["gram"],
-        rank_col="gid",
-    ))
-    ranked = g.join(F.broadcast(dfreq), "gram").select(
-        "doc_id", "gram", "gid", "df"
+    g = d.select("doc_id", F.explode_outer("grams").alias("gram")).filter(
+        F.col("gram").isNotNull()
     )
-    w = Window.partitionBy("doc_id").orderBy("df", "gram")
-    sz = Window.partitionBy("doc_id")
-    prefix = barrier(
-        ranked.select(
-            "doc_id",
-            "gid",
-            F.row_number().over(w).alias("pos"),
-            F.count(F.lit(1)).over(sz).alias("n"),
-        )
-        .filter(
-            F.col("pos")
-            <= F.col("n")
-            - F.floor((F.col("n") * p_ + q_ - 1) / q_).cast("long")
-            + 1
-        )
-        .select("doc_id", "gid", "pos", "n")
+    # gram interning: gid = position in the (df, gram) rarity order, a
+    # bijection, so every downstream count equals the string form's; the
+    # candidate join hashes longs and verification intersects int arrays
+    vocab = sorted(
+        (df, gram)
+        for gram, df in g.groupBy("gram").agg(F.count(F.lit(1))).collect()
     )
+    gids = model_frame(
+        spark, "gram string, gid long",
+        {"gram": [w for _, w in vocab], "gid": list(range(len(vocab)))},
+    )
+    ids = (
+        keyed_widen(g.join(F.broadcast(gids), "gram"), "doc_id")
+        .groupBy("doc_id")
+        .agg(F.array_sort(F.collect_list("gid")).alias("gi"))
+    )
+    n = F.size("gi")
+    prefix = ids.select(
+        "doc_id",
+        n.alias("n"),
+        F.posexplode(
+            F.slice(
+                "gi", 1,
+                n - F.floor((n * p_ + q_ - 1) / q_).cast("int") + 1,
+            )
+        ).alias("pos0", "gid"),
+    ).withColumn("pos", F.col("pos0") + 1)
     a = prefix.select(
         F.col("doc_id").alias("doc_a"), "gid",
         F.col("pos").alias("pos_a"), F.col("n").alias("n_a"),
@@ -365,57 +356,20 @@ def jaccard_pairs_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # verification in interned-id space (bijective → identical
-    # intersection/union counts). Round-14 (§4.4-adjacent, measured):
-    # when the interned vocabulary is small enough — gid range within
-    # BITMAP_MAX_WORDS 64-bit words — each doc's gram SET becomes a
-    # fixed-width bitmap and the per-pair intersection is
-    # Σ bit_count(ma[w] & mb[w]) over W words instead of an
-    # array_intersect hash-set build over ~2·|grams| elements: 6.7 →
-    # 5.0 s warm at sf0.1 on the 931-gram corpus (W=15), rows
-    # identical. The gid bounds come from the barrier-backed
-    # vocab-sized dfreq (one ms-scale driver action per invocation —
-    # control metadata, recomputed from parquet every run). On a
-    # natural large vocabulary the guard falls through to the
-    # array-intersect form — the bitmap is a small-universe
-    # specialization, not the scale posture.
-    # round-15 ADVICE fixes: (a) an EMPTY corpus makes the bounds probe
-    # return (None, None) — int(None - None) raised TypeError where the
-    # array branch returns the empty result gracefully; (b) under
-    # no_barriers() (plan audits) dfreq is not checkpointed, so the
-    # eager driver-side probe would recompute the full explode+rank
-    # subtree just to pick a verify branch — skip the probe and take
-    # the data-independent array branch there (the audit pins the
-    # natural-vocabulary posture; the bitmap is an execution-time
-    # specialization).
-    from ..barrier import _ENABLED as _barriers_on
-
-    gid_lo = gid_hi = None
-    if _barriers_on:
-        gid_lo, gid_hi = dfreq.agg(F.min("gid"), F.max("gid")).first()
-    n_words = (
-        int(gid_hi - gid_lo) // 64 + 1 if gid_hi is not None else None
-    )
-    ids = (
-        g.join(F.broadcast(dfreq.select("gram", "gid")), "gram")
-        .groupBy("doc_id")
-        .agg(F.collect_list("gid").alias("grams_i"))
-    )
-    if n_words is not None and n_words <= BITMAP_MAX_WORDS:
+    # Verify branch: the bitmap is a small-universe specialization of
+    # the executed plan. An empty corpus (n_words = 0) and a natural
+    # vocabulary take array_intersect; so do plan audits under
+    # no_barriers(), which pin that scale posture.
+    n_words = (len(vocab) - 1) // 64 + 1
+    if _barriers_on and 0 < n_words <= BITMAP_MAX_WORDS:
         bitmap = F.expr(
             f"""transform(sequence(0, {n_words - 1}, 1), wd ->
-              aggregate(filter(grams_i,
-                               x -> CAST((x - {gid_lo}) DIV 64 AS INT) = wd),
+              aggregate(filter(gi, x -> CAST(x DIV 64 AS INT) = wd),
                         0L,
                         (acc, x) ->
-                          acc | shiftleft(1L,
-                                          CAST((x - {gid_lo}) % 64 AS INT))))"""
+                          acc | shiftleft(1L, CAST(x % 64 AS INT))))"""
         )
-        d_ids = barrier(
-            ids.select(
-                "doc_id", F.size("grams_i").alias("nn"), bitmap.alias("bm")
-            )
-        )
+        d_ids = ids.select("doc_id", n.alias("nn"), bitmap.alias("bm"))
         ga = d_ids.select(
             F.col("doc_id").alias("doc_a"),
             F.col("nn").alias("na"), F.col("bm").alias("ma"),
@@ -430,13 +384,8 @@ def jaccard_pairs_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("double")
         union = (F.col("na") + F.col("nb")).cast("double") - inter
     else:
-        d_ids = barrier(ids)
-        ga = d_ids.select(
-            F.col("doc_id").alias("doc_a"), F.col("grams_i").alias("ga")
-        )
-        gb = d_ids.select(
-            F.col("doc_id").alias("doc_b"), F.col("grams_i").alias("gb")
-        )
+        ga = ids.select(F.col("doc_id").alias("doc_a"), F.col("gi").alias("ga"))
+        gb = ids.select(F.col("doc_id").alias("doc_b"), F.col("gi").alias("gb"))
         inter = F.size(F.array_intersect("ga", "gb")).cast("double")
         union = (F.size("ga") + F.size("gb")).cast("double") - inter
     return (

@@ -11,6 +11,7 @@ import duckdb
 from novelti_dingo_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     exact_dedup_survivors,
+    jaccard_pairs_prefix_filter,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
@@ -308,3 +309,25 @@ def test_capped_lsh_drops_only_hot_bucket_pairs(spark, tmp_path):
     assert real_pairs and real_pairs <= capped
     assert capped.isdisjoint(boiler_pairs)
     assert capped < plain
+
+
+def test_ppjoin_one_lazy_plan_job_count(spark, sf_small):
+    """PPJoin runs as one vocabulary collect plus one lazy plan: at most
+    10 Spark jobs in its own job group (build and execution), no
+    checkpoint-backed scan in the executed plan, and the rows of the
+    exact all-pairs twin."""
+    sc = spark.sparkContext
+    group = "test-ppjoin-one-lazy-plan"
+    sc.setJobGroup(group, group)
+    try:
+        df = jaccard_pairs_prefix_filter(spark, sf_small)
+        got = {tuple(r) for r in df.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 10, n_jobs
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for scan in ("ExistingRDD", "LogicalRDD"):
+        assert scan not in plan, plan
+    want = {tuple(r) for r in ngram_jaccard_pairs(spark, sf_small).collect()}
+    assert got and got == want

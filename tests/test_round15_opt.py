@@ -1,6 +1,6 @@
 """Round-15 optimization pins: the per-invocation knn corpus rebuild
 (no cross-invocation cache), the PPJoin empty-corpus / no-barriers
-guards around the bitmap-verify bounds probe, and the NULL-safe
+guards on the bitmap-verify branch, and the NULL-safe
 order-statistics percentile."""
 
 from __future__ import annotations
@@ -51,10 +51,11 @@ def test_ppjoin_empty_corpus_returns_empty(spark, tmp_path):
 
 
 def test_ppjoin_audit_plan_skips_bounds_probe(spark, sf_small):
-    """Under no_barriers() (plan audits) the driver-side gid bounds
-    probe would recompute the whole explode+rank subtree; the audit
-    path must take the array branch without any eager action, and its
-    plan must carry the array_intersect verify, not the bitmap."""
+    """Under no_barriers() (plan audits) the verify branch is chosen
+    without looking at the data: the audit path still runs the one
+    eager vocabulary collect, as the executed path does, but takes the
+    array branch whatever the vocabulary size, so its plan must carry
+    the array_intersect verify, not the bitmap."""
     from novelti_dingo_spark.operators import dedup
 
     with no_barriers():

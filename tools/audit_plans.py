@@ -209,7 +209,8 @@ EXPECT = {
     "rollup_hour_to_day": {"partial_agg": True, "no_python_udf": True,
                            "max_scan_cols": 3},
     # prefix-filter set-similarity: candidate generation and verification
-    # are hash joins (never NLJ); df table is two-phase aggregated
+    # are hash joins (never NLJ); the df table is a separate collected
+    # query, the per-doc collect_list and candidate distinct are two-phase
     "jaccard_pairs_prefix_filter": {
         "hash_join_not_nlj": True, "partial_agg": True,
         "no_python_udf": True, "max_scan_cols": 2,
